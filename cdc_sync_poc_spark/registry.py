@@ -190,6 +190,7 @@ _PRIORITY_PREFIXES = [
     "retrieval_", "slice_",
     "sem_", "llm_", "dsir_",
     "plan_", "gopher_", "bpe_", "dq_", "maint_",
+    "pipeline_", "pii_", "doc_", "seq_", "pack_", "train_",
 ]
 
 

@@ -281,6 +281,8 @@ class Scd2StreamWriter:
         rewrites at most min(k, n_buckets) buckets."""
         import shutil
 
+        from cdc_sync_poc_spark.streaming.writer import cluster_by_bucket
+
         touched = sorted(
             r.b
             for r in batch_pks.select(self._bucket_col().alias("b"))
@@ -298,7 +300,8 @@ class Scd2StreamWriter:
             .withColumn("bucket", self._bucket_col())
             .filter(F.col("bucket").isin([int(b) for b in touched]))
         )
-        bucketed.write.partitionBy("bucket").parquet(tmp)
+        # one file per touched bucket version, like the merge writer
+        cluster_by_bucket(bucketed).write.partitionBy("bucket").parquet(tmp)
         for k in touched:
             src = os.path.join(tmp, f"bucket={k}")
             dst = os.path.join(self.buckets_dir, f"bucket={k}", f"v={batch_id}")

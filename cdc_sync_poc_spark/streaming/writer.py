@@ -19,10 +19,13 @@ Scheduler job, st04):
 
 Scale: a batch touching k distinct keys rewrites at most
 min(k, n_buckets) buckets — i.e. ~(k / n_buckets) of the table instead
-of all of it; at 100 TB you raise ``n_buckets`` (or switch to Delta
-row-level MERGE + deletion vectors) so each rewrite stays bounded. The
-reference's per-row commits (04_create_procedures.sql:99) have no scale
-path at all.
+of all of it — and writes one parquet file per touched bucket plus one
+audit file, whatever the join's parallelism (``cluster_by_bucket``). A
+bucket is therefore written by one task: at 100 TB you raise
+``n_buckets`` (or switch to Delta row-level MERGE + deletion vectors)
+so each bucket, and each rewrite, stays bounded. The reference's
+per-row commits (04_create_procedures.sql:99) have no scale path at
+all.
 
 Replay/crash semantics (at-least-once foreachBatch made effectively
 exactly-once):
@@ -101,6 +104,23 @@ def pk_bucket_col(col: F.Column, n_buckets: int) -> F.Column:
     return F.pmod(F.xxhash64(col.cast("long")), F.lit(n_buckets))
 
 
+def cluster_by_bucket(df: DataFrame) -> DataFrame:
+    """Route all rows of a ``bucket`` to one task, so the
+    ``write.partitionBy("bucket")`` that follows writes each bucket as
+    ONE file instead of one per upstream partition (a pk-hash join
+    spreads every bucket over all of its partitions). Shared by both
+    bucketed stores; AQE coalesces the small post-shuffle partitions,
+    and never splits a bucket across two."""
+    return df.repartition("bucket")
+
+
+# The declared state schema (``bucket`` is the partition column). State
+# reads use it instead of inferring it from parquet footers, which costs
+# a Spark job per read and fails outright once every bucket has merged
+# to empty and only ``_SUCCESS`` is left.
+STATE_SCHEMA = "pk long, name string, acctbal double, bucket int"
+
+
 class ParquetMergeWriter:
     """MERGE-into-parquet state maintainer for foreachBatch, with
     pk-hash-bucketed state so each batch rewrites only touched buckets."""
@@ -135,21 +155,38 @@ class ParquetMergeWriter:
         return pk_bucket_col(col, self.n_buckets)
 
     def init_state(self, base: DataFrame) -> None:
-        (
+        self._write_state(
             base.select(
                 F.col("c_custkey").alias("pk"),
                 F.col("c_name").alias("name"),
                 F.col("c_acctbal").alias("acctbal"),
+            ),
+            self.state_dir,
+        )
+
+    def _write_state(self, rows: DataFrame, path: str) -> None:
+        """Write (pk, name, acctbal) rows bucketed under ``path``, one
+        file per bucket, typed as ``STATE_SCHEMA`` declares."""
+        (
+            cluster_by_bucket(
+                rows.select(
+                    F.col("pk").cast("long"),
+                    F.col("name").cast("string"),
+                    F.col("acctbal").cast("double"),
+                    self._bucket(F.col("pk")).alias("bucket"),
+                )
             )
-            .withColumn("bucket", self._bucket(F.col("pk")))
             .write.mode("overwrite")
             .partitionBy("bucket")
-            .parquet(self.state_dir)
+            .parquet(path)
         )
+
+    def _read_state(self) -> DataFrame:
+        return self.spark.read.schema(STATE_SCHEMA).parquet(self.state_dir)
 
     def current_state(self) -> DataFrame:
         self._recover_buckets()
-        return self.spark.read.parquet(self.state_dir).drop("bucket")
+        return self._read_state().drop("bucket")
 
     def _recover_buckets(self) -> None:
         """Repair a crash that landed between the two renames of a swap:
@@ -214,7 +251,7 @@ class ParquetMergeWriter:
 
         # partition pruning: the filter on the partition column means the
         # scan lists/reads ONLY the touched bucket directories
-        state = self.spark.read.parquet(self.state_dir).filter(
+        state = self._read_state().filter(
             F.col("bucket").isin([int(b) for b in touched])
         )
         j = state.join(last, state.pk == last.pk, "full_outer")
@@ -233,12 +270,7 @@ class ParquetMergeWriter:
             ),
         )
         tmp = f"{self.state_dir}.tmp-batch-{batch_id}"
-        (
-            merged.withColumn("bucket", self._bucket(F.col("pk")))
-            .write.mode("overwrite")
-            .partitionBy("bucket")
-            .parquet(tmp)
-        )
+        self._write_state(merged, tmp)
 
         # audit BEFORE swapping state (the plan scans the pre-batch state
         # lazily); each key's DECIDING row gets a status — the last-wins
@@ -275,7 +307,9 @@ class ParquetMergeWriter:
             .otherwise("SUCCESS")
             .alias("status"),
         )
-        audit.write.mode("overwrite").parquet(
+        # one audit file per batch; repartition, not coalesce, so the
+        # existence join keeps its parallelism when state is not broadcast
+        audit.repartition(1).write.mode("overwrite").parquet(
             os.path.join(self.audit_dir, f"batch_id={batch_id}")
         )
 

@@ -185,8 +185,9 @@ def test_kafka_reader_options_parity():
 def test_bucketed_merge_rewrites_only_touched_buckets(spark, tmp_path):
     """The MERGE writer hash-buckets state by pk and a batch must leave
     every untouched bucket's files byte-identical (the partition-pruned
-    analog of row-level MERGE); replaying the same batch must not
-    duplicate audit rows and must leave the state unchanged."""
+    analog of row-level MERGE), write each rewritten bucket and the
+    batch's audit partition as ONE file; replaying the same batch must
+    not duplicate audit rows and must leave the state unchanged."""
     import hashlib
     from pathlib import Path
 
@@ -226,6 +227,9 @@ def test_bucketed_merge_rewrites_only_touched_buckets(spark, tmp_path):
     after = bucket_digests()
     changed = {k for k in before if before[k] != after.get(k)}
     assert len(changed) == 1  # only pk=7's bucket rewritten
+    (bucket,) = changed
+    assert len(list(Path(out, "state", bucket).glob("*.parquet"))) == 1
+    assert len(list(Path(out, "audit", "batch_id=0").glob("*.parquet"))) == 1
     assert {r.acctbal for r in writer.current_state().filter("pk = 7").collect()} == {
         123.0
     }
@@ -238,6 +242,84 @@ def test_bucketed_merge_rewrites_only_touched_buckets(spark, tmp_path):
     assert {r.acctbal for r in writer.current_state().filter("pk = 7").collect()} == {
         123.0
     }
+
+
+def test_writer_survives_a_batch_that_deletes_every_key(spark, tmp_path):
+    """A batch that DELETEs every key merges every bucket to empty,
+    leaving ``state/`` with only ``_SUCCESS``. The state must still read
+    (as empty), and the next batch must apply on top of it."""
+    from pyspark.sql import functions as F
+
+    from cdc_sync_poc_spark.streaming.writer import ParquetMergeWriter
+
+    out = tmp_path / "emptied"
+    writer = ParquetMergeWriter(
+        spark, str(out / "state"), str(out / "audit"), n_buckets=4
+    )
+    base = spark.range(0, 6).select(
+        F.col("id").alias("c_custkey"),
+        F.concat(F.lit("name"), F.col("id")).alias("c_name"),
+        F.col("id").cast("double").alias("c_acctbal"),
+    )
+    writer.init_state(base)
+    schema = "cdc_seq long, pk long, operation string, val double"
+    deletes = spark.createDataFrame(
+        [(pk, pk, "DELETE", None) for pk in range(6)], schema
+    )
+    writer.apply_batch(deletes, batch_id=0)
+    assert not list((out / "state").glob("bucket=*"))
+    assert writer.current_state().count() == 0
+
+    writer.apply_batch(
+        spark.createDataFrame([(6, 42, "INSERT", 4.2)], schema), batch_id=1
+    )
+    assert [tuple(r) for r in writer.current_state().collect()] == [
+        (42, "U42", 4.2)
+    ]
+    audit = {
+        (r.batch_id, r.pk, r.status)
+        for r in spark.read.parquet(str(out / "audit")).collect()
+    }
+    assert audit == {(0, pk, "SUCCESS") for pk in range(6)} | {
+        (1, 42, "SUCCESS")
+    }
+
+
+def test_current_state_starts_no_spark_job(spark, tmp_path):
+    """Reading the state with its declared schema needs no footer
+    inference: building ``current_state()`` over a populated state
+    starts no Spark job (an action on it does — the control)."""
+    from pyspark.sql import functions as F
+
+    from cdc_sync_poc_spark.streaming.writer import ParquetMergeWriter
+
+    out = tmp_path / "nojob"
+    writer = ParquetMergeWriter(
+        spark, str(out / "state"), str(out / "audit"), n_buckets=8
+    )
+    writer.init_state(
+        spark.range(0, 100).select(
+            F.col("id").alias("c_custkey"),
+            F.concat(F.lit("name"), F.col("id")).alias("c_name"),
+            F.col("id").cast("double").alias("c_acctbal"),
+        )
+    )
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group = f"current-state-{tmp_path.name}"
+    sc.setJobGroup(group, "current_state job probe")
+    try:
+        state = writer.current_state()
+        assert tracker.getJobIdsForGroup(group) == []
+        assert state.count() == 100
+        assert tracker.getJobIdsForGroup(group)  # the probe sees jobs
+    finally:
+        for key in (
+            "spark.jobGroup.id",
+            "spark.job.description",
+            "spark.job.interruptOnCancel",
+        ):
+            sc.setLocalProperty(key, None)
 
 
 def test_stream_pipeline_stateful_dedup_variant(spark, stream_dirs):
@@ -863,6 +945,9 @@ def test_scd2_bucketed_matches_whole_swap(spark, chunked_events, tmp_path):
                 if v.startswith("v=")
             ]
             assert len(vs) == 1, (b, vs)
+            # each bucket version is written as one file
+            files = os.listdir(os.path.join(writer.buckets_dir, b, vs[0]))
+            assert len([f for f in files if f.endswith(".parquet")]) == 1
 
 
 @pytest.mark.slow
